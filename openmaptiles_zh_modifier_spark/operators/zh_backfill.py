@@ -5,7 +5,9 @@ Semantics re-expressed from OMTZHModifier.java (SURVEY.md §2/§3):
   scan → project(P1) → filter(P2 server + P4 residual) → normalize(P5)
        → derive(F5 coalesce cascade) → changed-rows(F6) → write-back(F7/S5)
 
-as ONE lazy DataFrame plan per table. The reference's manual id-range
+as ONE lazy DataFrame plan per table. The row rule is written once, in
+:func:`zh_derivation`; every write-back form is a ``where``/``select``
+over its expressions. The reference's manual id-range
 batching loop (OMTZHModifier.java:130-137) disappears: file splits / JDBC
 partitioning replace it, and the whole derivation is a shuffle-free,
 map-side-only transform — at 100 TB this runs as a single stage of
@@ -34,12 +36,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.functions.zh import (
+    CURATED,
     is_han,
     nullif_empty,
+    opencc_tables_from_env,
     to_simplified,
     to_traditional,
 )
-from ..functions.zh import CURATED, opencc_tables_from_env
 
 
 KEY_ZH = "name:zh"
@@ -48,14 +51,66 @@ KEY_HANT = "name:zh-Hant"
 KEY_HANT_TYPO = "names:zh-Hant"  # B1: the reference's misspelled read key
 
 
-def _qualifies(name: Column, tags: Column) -> Column:
-    """Server-side WHERE (P2, OMTZHModifier.java:137-138): has some name
-    source AND at least one zh variant missing. Uses the CORRECT keys even
-    in typo mode — the reference's WHERE is spelled right; only the SELECT
-    is not."""
-    return (name.isNotNull() | tags[KEY_ZH].isNotNull()) & (
+def zh_derivation(compat_names_typo: bool = False, tables=None) -> dict[str, Column]:
+    """The back-fill row rule, written once, as named column expressions
+    over ``(name, tags)``. Every write-back form is a ``where``/``select``
+    over these:
+
+    - ``candidate``: passes the server-side WHERE and has a zh source
+    - ``update``: a candidate whose hans or hant is missing (F6)
+    - ``zh``, ``hans_old``, ``hant_old``: the P4 source and P5-normalized
+      existing values
+    - ``hans``, ``hant``: the F5 coalesce cascade
+    - ``needs_update``: the F6 changed-row flag
+    - ``new_tags``: the F7 post-update tags map
+
+    ``tables`` (or env ``SPARK_GRAFT_OPENCC_DIR``, resolved here) swaps
+    in ingested OpenCC dictionaries; ``CURATED`` pins the curated tables
+    whatever the environment says.
+    """
+    if tables is CURATED:
+        tables = None
+    elif tables is None:
+        tables = opencc_tables_from_env()
+    name = F.col("name")
+    tags = F.col("tags")
+
+    # P2 server-side WHERE (OMTZHModifier.java:137-138): some name source
+    # AND a zh variant missing. Raw IS NULL (B7) and the CORRECT keys even
+    # in typo mode: only the reference's SELECT is misspelled.
+    qualifies = (name.isNotNull() | tags[KEY_ZH].isNotNull()) & (
         tags[KEY_HANT].isNull() | tags[KEY_HANS].isNull()
     )
+    # P4 residual: zh source = tags['name:zh'], else name when it is a
+    # non-empty Han-script string (:209-218).
+    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
+    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
+    # P5: '' and NULL are the same "missing" state (:220-225).
+    hans_old = nullif_empty(tags[KEY_HANS])
+    hant_old = nullif_empty(
+        tags[KEY_HANT_TYPO if compat_names_typo else KEY_HANT]
+    )
+    # F5 coalesce cascade (:227-235) + F6 changed-row flag (:207,237-244).
+    hans = F.coalesce(hans_old, to_simplified(zh, tables))
+    hant = F.coalesce(hant_old, to_traditional(zh, tables))
+    needs_update = hans_old.isNull() | hant_old.isNull()
+    candidate = qualifies & zh.isNotNull()
+    # F7: hstore ``||`` is map_concat under LAST_WIN (right operand wins).
+    new_tags = F.map_concat(
+        F.coalesce(tags, F.create_map().cast("map<string,string>")),
+        F.create_map(F.lit(KEY_HANS), hans, F.lit(KEY_HANT), hant),
+    )
+    return {
+        "candidate": candidate,
+        "update": candidate & needs_update,
+        "zh": zh,
+        "hans_old": hans_old,
+        "hant_old": hant_old,
+        "hans": hans,
+        "hant": hant,
+        "needs_update": needs_update,
+        "new_tags": new_tags,
+    }
 
 
 def derive_zh_columns(
@@ -70,52 +125,11 @@ def derive_zh_columns(
 
     Pure column expressions — Catalyst pushes the filter into the scan and
     prunes the projection to exactly (id_field, name, tags).
-
-    ``tables`` (or env ``SPARK_GRAFT_OPENCC_DIR``, resolved here) swaps
-    in ingested OpenCC dictionaries — the deployment path to full
-    dictionary parity (VERDICT r11 #3); unset = curated gate path.
     """
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
-    name = F.col("name")
-    tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
-
-    # P1 projection with map-key extraction (element_at == hstore ->).
-    zh_raw = tags[KEY_ZH]
-    hans_raw = tags[KEY_HANS]
-    hant_raw = tags[hant_read_key]
-
-    # P4 residual: zh source = tags['name:zh'], else name when it is a
-    # non-empty Han-script string (OMTZHModifier.java:209-218).
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(zh_raw, F.when(name_usable, name))
-
-    # P5: '' and NULL are the same "missing" state (:220-225).
-    hans_old = nullif_empty(hans_raw)
-    hant_old = nullif_empty(hant_raw)
-
-    # F5 coalesce cascade (:227-235) + F6 changed-row flag (:207,237-244).
-    hans_new = F.coalesce(hans_old, to_simplified(zh, tables))
-    hant_new = F.coalesce(hant_old, to_traditional(zh, tables))
-    needs_update = hans_old.isNull() | hant_old.isNull()
-
-    return (
-        df.where(_qualifies(name, tags))
-        .where(zh.isNotNull())
-        .select(
-            F.col(id_field),
-            name.alias("name"),
-            zh.alias("zh"),
-            hans_old.alias("hans_old"),
-            hant_old.alias("hant_old"),
-            hans_new.alias("hans"),
-            hant_new.alias("hant"),
-            needs_update.alias("needs_update"),
-        )
+    d = zh_derivation(compat_names_typo, tables)
+    cols = ("zh", "hans_old", "hant_old", "hans", "hant", "needs_update")
+    return df.where(d["candidate"]).select(
+        F.col(id_field), F.col("name"), *(d[c].alias(c) for c in cols)
     )
 
 
@@ -128,8 +142,10 @@ def updates_frame(
     """The changed-rows frame ``(id_field, hans, hant)`` — the engine's
     equivalent of the reference's List<ChineseValues> per batch
     (OMTZHModifier.java:140-152), but computed distributed and lazy."""
-    derived = derive_zh_columns(df, id_field, compat_names_typo, tables)
-    return derived.where(F.col("needs_update")).select(id_field, "hans", "hant")
+    d = zh_derivation(compat_names_typo, tables)
+    return df.where(d["update"]).select(
+        F.col(id_field), d["hans"].alias("hans"), d["hant"].alias("hant")
+    )
 
 
 def updates_frame_with_tags(
@@ -138,44 +154,18 @@ def updates_frame_with_tags(
     compat_names_typo: bool = False,
     tables=None,
 ) -> DataFrame:
-    """Changed-rows frame ``(id_field, hans, hant, new_tags_map)`` computed
-    in ONE projection over ONE scan — for sinks that must write the full
+    """Changed-rows frame ``(id_field, hans, hant, new_tags_map)`` in ONE
+    projection over ONE scan — for sinks that must write the full
     post-update tags value (the JDBC staging path). Deliberately NOT a
     join of :func:`updates_frame` back onto the source: over a live JDBC
     source, two scans are two snapshots, and pairing hans/hant from one
     snapshot with tags from another silently loses concurrent writes."""
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
-    name = F.col("name")
-    tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
-
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
-    hans_old = nullif_empty(tags[KEY_HANS])
-    hant_old = nullif_empty(tags[hant_read_key])
-    hans_new = F.coalesce(hans_old, to_simplified(zh, tables))
-    hant_new = F.coalesce(hant_old, to_traditional(zh, tables))
-    needs_update = hans_old.isNull() | hant_old.isNull()
-    new_tags = F.map_concat(
-        F.coalesce(tags, F.create_map().cast("map<string,string>")),
-        F.create_map(
-            F.lit(KEY_HANS), hans_new,
-            F.lit(KEY_HANT), hant_new,
-        ),
-    )
-    return (
-        df.where(_qualifies(name, tags))
-        .where(zh.isNotNull() & needs_update)
-        .select(
-            F.col(id_field),
-            hans_new.alias("hans"),
-            hant_new.alias("hant"),
-            new_tags.alias("new_tags_map"),
-        )
+    d = zh_derivation(compat_names_typo, tables)
+    return df.where(d["update"]).select(
+        F.col(id_field),
+        d["hans"].alias("hans"),
+        d["hant"].alias("hant"),
+        d["new_tags"].alias("new_tags_map"),
     )
 
 
@@ -185,79 +175,13 @@ def backfill_table(
     compat_names_typo: bool = False,
     tables=None,
 ) -> DataFrame:
-    """Full-table rewrite form of the write-back (S5 option b).
-
-    Computes the derivation inline and conditionally concatenates the two
-    keys onto ``tags`` (F7; LAST_WIN gives hstore ``||`` right-wins
-    semantics). NO JOIN and NO SHUFFLE: the update is recomputed where it
-    applies, which at lake scale beats materializing an updates frame and
-    joining it back. Every other column is passed through untouched.
+    """Full-table rewrite form of the write-back (S5 option b): ``tags``
+    becomes the F7 post-update map where the row updates, and every other
+    row and column passes through untouched. NO JOIN and NO SHUFFLE: the
+    update is recomputed where it applies, which at lake scale beats
+    materializing an updates frame and joining it back.
     """
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
-    name = F.col("name")
-    tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
-
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
-    hans_old = nullif_empty(tags[KEY_HANS])
-    hant_old = nullif_empty(tags[hant_read_key])
-    needs_update = hans_old.isNull() | hant_old.isNull()
-
-    apply_update = _qualifies(name, tags) & zh.isNotNull() & needs_update
-    new_tags = F.map_concat(
-        F.coalesce(tags, F.create_map().cast("map<string,string>")),
-        F.create_map(
-            F.lit(KEY_HANS), F.coalesce(hans_old, to_simplified(zh, tables)),
-            F.lit(KEY_HANT), F.coalesce(hant_old, to_traditional(zh, tables)),
-        ),
-    )
+    d = zh_derivation(compat_names_typo, tables)
     return df.withColumn(
-        "tags", F.when(apply_update, new_tags).otherwise(tags)
-    )
-
-
-def merge_backfill(
-    base: DataFrame,
-    updates: DataFrame,
-    id_field: str = "id",
-    broadcast_updates: bool | None = None,
-) -> DataFrame:
-    """Keyed-join form of the write-back (S5 option a without Delta): the
-    logical left-join the reference spells as per-row UPDATE statements
-    (OMTZHModifier.java:157-169).
-
-    When the updates side is small (the common back-fill case: few rows
-    change), broadcast it so the join is shuffle-free on the 100 TB base
-    side. ``broadcast_updates=None`` leaves the decision to AQE/Catalyst.
-    """
-    upd = updates.select(
-        F.col(id_field).alias("__upd_id"),
-        F.col("hans").alias("__upd_hans"),
-        F.col("hant").alias("__upd_hant"),
-    )
-    if broadcast_updates:
-        upd = F.broadcast(upd)
-    joined = base.join(upd, base[id_field] == upd["__upd_id"], "left")
-    new_tags = F.map_concat(
-        F.coalesce(
-            F.col("tags"), F.create_map().cast("map<string,string>")
-        ),
-        F.create_map(
-            F.lit(KEY_HANS), F.col("__upd_hans"),
-            F.lit(KEY_HANT), F.col("__upd_hant"),
-        ),
-    )
-    return (
-        joined.withColumn(
-            "tags",
-            F.when(F.col("__upd_id").isNotNull(), new_tags).otherwise(
-                F.col("tags")
-            ),
-        )
-        .drop("__upd_id", "__upd_hans", "__upd_hant")
+        "tags", F.when(d["update"], d["new_tags"]).otherwise(F.col("tags"))
     )

@@ -14,7 +14,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.catalog import (
     classify_all,
@@ -23,6 +24,8 @@ from openmaptiles_zh_modifier_spark.catalog import (
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
     backfill_table,
     updates_frame,
+    updates_frame_with_tags,
+    zh_derivation,
 )
 from openmaptiles_zh_modifier_spark.sources.io import write_parquet
 
@@ -94,8 +97,6 @@ def hstore_text_to_map(col):
     ``NULL`` values become real SQL nulls; ``\"`` and ``\\`` escapes in
     keys/values are unescaped. Duplicate keys collapse LAST_WIN (matches
     hstore || and the session's mapKeyDedupPolicy)."""
-    from pyspark.sql import functions as F
-
     # Mark unquoted NULL values with a sentinel that cannot appear in
     # hstore text (U+0000: PostgreSQL text types reject NUL), so
     # extraction sees uniformly-quoted values. The match is anchored to
@@ -139,8 +140,6 @@ def map_to_hstore_text(col):
     (``"k"=>"v", "k2"=>NULL``) — the exact inverse of hstore_text_to_map,
     with ``\\`` and ``\"`` escaping and unquoted NULL for null values.
     Pure codegen expressions (map_entries -> transform -> array_join)."""
-    from pyspark.sql import functions as F
-
     def esc(c):
         return F.replace(
             F.replace(c, F.lit("\\"), F.lit("\\\\")),
@@ -160,6 +159,24 @@ def map_to_hstore_text(col):
         ),
     )
     return F.array_join(entries, ", ")
+
+
+def _staged_hstore(
+    df: DataFrame, id_field: str, compat_names_typo: bool
+) -> DataFrame:
+    """JDBC staging rows ``(id_field, hans, hant, new_tags)`` from a frame
+    whose ``tags`` is hstore text: parse it to a map, derive the changed
+    rows in ONE projection over ONE scan (a join of the updates frame back
+    onto the source would be a second scan, and over a live database two
+    scans are two snapshots), and serialize the full post-update map back
+    to hstore text for the generic-dialect apply."""
+    mapped = df.withColumn("tags", hstore_text_to_map(df["tags"]))
+    return updates_frame_with_tags(mapped, id_field, compat_names_typo).select(
+        id_field,
+        "hans",
+        "hant",
+        map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
+    )
 
 
 def _apply_update_sql(
@@ -238,12 +255,7 @@ def run_backfill_jdbc(
     (Derby folds up, PostgreSQL folds down; the reference compares
     lowercase PG names); staging tables are created unquoted next to
     their source schema."""
-    from pyspark.sql import functions as F
-
     from openmaptiles_zh_modifier_spark.catalog import discover_jdbc_tables
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
-    )
     from openmaptiles_zh_modifier_spark.sources.io import (
         execute_jdbc_update,
         read_jdbc_partitioned,
@@ -271,19 +283,7 @@ def run_backfill_jdbc(
             driver=driver,
             **opts,
         ).toDF(*[c.lower() for c in tables[tc.table].columns])
-        mapped = scan.withColumn("tags", hstore_text_to_map(scan["tags"]))
-        # the generic-dialect apply sets the FULL new tags text; derive
-        # (id, hans, hant, new_tags) in ONE projection over ONE scan — a
-        # join of the updates frame back onto the source would be a second
-        # scan, and over a live database two scans are two snapshots.
-        staged_df = updates_frame_with_tags(
-            mapped, tc.id_field, compat_names_typo
-        ).select(
-            tc.id_field,
-            "hans",
-            "hant",
-            map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
-        )
+        staged_df = _staged_hstore(scan, tc.id_field, compat_names_typo)
         staging = f"{tc.table}{staging_suffix}"
         write_jdbc(
             staged_df, url, staging, mode="overwrite", driver=driver, **opts
@@ -325,21 +325,15 @@ def stream_backfill_to_jdbc(
     re-scans instead, OMTZHModifier.java:120-140), and every micro-batch
     runs the IDENTICAL staging-write + server-side ``UPDATE … FROM
     staging`` path the batch program uses — ``foreachBatch`` hands each
-    micro-batch over as a batch DataFrame, so ``updates_frame_with_tags``
-    / ``map_to_hstore_text`` / ``_apply_update_sql`` are shared, not
-    reimplemented. The staging table is OVERWRITTEN per batch (it is a
-    transport buffer, not a log) and the keyed UPDATE is idempotent on
+    micro-batch over as a batch DataFrame, so ``_staged_hstore`` and
+    ``_apply_update_sql`` are shared, not reimplemented. The staging
+    table is OVERWRITTEN per batch (it is a transport buffer, not a log) and the keyed UPDATE is idempotent on
     replay — re-deriving the same hans/hant writes the same tags — which
     is exactly the at-least-once-to-effectively-once story foreachBatch
     requires.
 
     Returns the total server-reported update count across batches (the
     reference's executeBatch tally, OMTZHModifier.java:169-176)."""
-    from pyspark.sql import functions as F
-
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
-    )
     from openmaptiles_zh_modifier_spark.sources.io import (
         execute_jdbc_update,
         write_jdbc,
@@ -350,17 +344,7 @@ def stream_backfill_to_jdbc(
     counts: list[int] = []
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        mapped = batch_df.withColumn(
-            "tags", hstore_text_to_map(batch_df["tags"])
-        )
-        staged = updates_frame_with_tags(
-            mapped, id_field, compat_names_typo
-        ).select(
-            id_field,
-            "hans",
-            "hant",
-            map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
-        )
+        staged = _staged_hstore(batch_df, id_field, compat_names_typo)
         write_jdbc(staged, url, staging, mode="overwrite", driver=driver, **opts)
         counts.append(
             execute_jdbc_update(
@@ -393,7 +377,7 @@ def run_backfill_cow(
     ``UPDATE ... WHERE id = ?`` (OMTZHModifier.java:156-169) expressed as
     a transactional lake MERGE: read the current committed version,
     derive the changed rows in one projection over one snapshot
-    (``updates_frame_with_tags`` — no torn two-scan read), and publish
+    (``zh_derivation`` — no torn two-scan read, no join), and publish
     version N+1 atomically via the manifest commit protocol (a
     concurrent writer loses with CowConflictError, mirroring Delta's
     optimistic concurrency; the reference's per-batch commit had no such
@@ -405,17 +389,12 @@ def run_backfill_cow(
     merge must not burn a version number — readers use version deltas as
     a change signal, e.g. the cowtable streaming source).
     """
-    from pyspark.sql import functions as F
-
     from openmaptiles_zh_modifier_spark.catalog import classify_schema
     from openmaptiles_zh_modifier_spark.operators.cow_table import (
         _latest_version,
         _read_manifest,
         cow_merge,
         cow_read,
-    )
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
     )
 
     # Pin the snapshot ONCE: read version V, derive from V, merge with
@@ -432,18 +411,14 @@ def run_backfill_cow(
             f"cow table at {root} does not qualify for zh back-fill "
             "(needs name + tags and an id/osm_id column)"
         )
-    updates = updates_frame_with_tags(df, tc.id_field, compat_names_typo)
+    d = zh_derivation(compat_names_typo)
     # partitioned tables: cow_merge routes the rewrite by the source's
-    # partition values, so the source must carry the partition column.
-    # The join-back is against the SAME pinned (immutable) snapshot, so
-    # it cannot tear, unlike the live-JDBC case updates_frame_with_tags
-    # exists to avoid.
-    if part_col and part_col != tc.id_field:
-        src = updates.join(
-            df.select(tc.id_field, part_col), tc.id_field
-        ).select(tc.id_field, "new_tags_map", part_col)
-    else:
-        src = updates.select(tc.id_field, "new_tags_map")
+    # partition values, so the source carries the partition column,
+    # projected from the same snapshot row as the derivation.
+    carry = [part_col] if part_col and part_col != tc.id_field else []
+    src = df.where(d["update"]).select(
+        tc.id_field, d["new_tags"].alias("new_tags_map"), *carry
+    )
     # one materialization serves the count, the uniqueness validation
     # scan, and the merge write (three recomputes of the conversion
     # projection otherwise)
@@ -508,7 +483,6 @@ def stream_upsert_to_cow(
     import os
 
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from openmaptiles_zh_modifier_spark.operators.cow_table import cow_merge
 

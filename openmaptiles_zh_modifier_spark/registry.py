@@ -20,13 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.functions.zh import (
+    CURATED,
     HAN_REGEX_RE2,
-    is_han,
-    nullif_empty,
-    to_simplified,
     to_simplified_sql,
-    to_traditional,
     to_traditional_sql,
+)
+from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
+    KEY_HANS,
+    KEY_HANT,
+    KEY_ZH,
+    updates_frame,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -240,35 +243,33 @@ def zh_fixture_src(docs: DataFrame) -> DataFrame:
     )
 
 
+def _fixture_tags(src: DataFrame) -> DataFrame:
+    """The scalar fixture columns in the production ``(name, tags map)``
+    shape: null-valued entries dropped, empty strings kept (quirk B7's
+    raw-IS-NULL WHERE must see them). map_from_arrays/map_filter build,
+    no UDF."""
+    return src.select(
+        "doc_id",
+        "name",
+        F.map_filter(
+            F.map_from_arrays(
+                F.array(F.lit(KEY_ZH), F.lit(KEY_HANS), F.lit(KEY_HANT)),
+                F.array("zh_tag", "hans_tag", "hant_tag"),
+            ),
+            lambda k, v: v.isNotNull(),
+        ).alias("tags"),
+    )
+
+
 def zh_backfill_transform(src: DataFrame) -> DataFrame:
-    """The reference's derivation chain (P2 -> P4 -> P5 -> F5 -> F6) as
-    stateless column expressions: works identically under batch and
-    Structured Streaming (no aggregation, no state — append mode)."""
-    name, zh_tag = F.col("name"), F.col("zh_tag")
-    hans_tag, hant_tag = F.col("hans_tag"), F.col("hant_tag")
-    qualified = src.where(
-        (name.isNotNull() | zh_tag.isNotNull())
-        & (hant_tag.isNull() | hans_tag.isNull())
-    )
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(zh_tag, F.when(name_usable, name))
-    hans_old = nullif_empty(hans_tag)
-    hant_old = nullif_empty(hant_tag)
-    return (
-        qualified.select(
-            "doc_id",
-            zh.alias("zh"),
-            hans_old.alias("hans_old"),
-            hant_old.alias("hant_old"),
-        )
-        .where(F.col("zh").isNotNull()
-               & (F.col("hans_old").isNull() | F.col("hant_old").isNull()))
-        .select(
-            "doc_id",
-            F.coalesce("hans_old", to_simplified("zh")).alias("hans"),
-            F.coalesce("hant_old", to_traditional("zh")).alias("hant"),
-        )
-    )
+    """The back-fill over the scalar fixture columns: the production
+    ``updates_frame`` over their tags map. Stateless column expressions,
+    so it works identically under batch and Structured Streaming (no
+    aggregation, no state — append mode). ``tables=CURATED`` pins the
+    curated dictionaries even where a deployment exported
+    SPARK_GRAFT_OPENCC_DIR: the static DuckDB oracle compiles the
+    curated literals, so the Spark side must too."""
+    return updates_frame(_fixture_tags(src), "doc_id", tables=CURATED)
 
 
 @register("zh_backfill", oracle=ZH_BACKFILL_ORACLE)
@@ -330,54 +331,17 @@ ORDER BY doc_id
 @register("zh_backfill_typo_compat", oracle=ZH_BACKFILL_TYPO_ORACLE)
 def q_zh_backfill_typo_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1 typo-compat back-fill through the REAL map-typed operator: the
-    scalar fixture is assembled into the production ``(name, tags map)``
-    shape (null-valued entries dropped, empty strings kept — quirk B7's
-    raw-IS-NULL WHERE must see them), then ``derive_zh_columns`` runs
+    scalar fixture (with the divergent stored Hant) is assembled into the
+    production ``(name, tags map)`` shape, then ``updates_frame`` runs
     with ``compat_names_typo=True`` so the Hant read misses and every
-    qualifying row regenerates Hant. Pure column expressions end to end:
-    map_from_arrays/map_filter build, element_at reads, no UDF."""
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        KEY_HANS,
-        KEY_HANT,
-        KEY_ZH,
-        derive_zh_columns,
-    )
-
+    qualifying row regenerates Hant."""
     docs = load(spark, sf_dir, "documents")
-    idx = F.col("doc_id")
-    src = docs.select(
-        idx,
-        _pick_spark(_ZH_NAMES, idx).alias("name"),
-        _pick_spark(_ZH_TAGVALS, idx).alias("zh_tag"),
-        _pick_spark(_ZH_HANS, idx).alias("hans_tag"),
-        _pick_spark(_ZH_HANT_DIVERGENT, idx).alias("hant_tag"),
+    src = zh_fixture_src(docs).withColumn(
+        "hant_tag", _pick_spark(_ZH_HANT_DIVERGENT, F.col("doc_id"))
     )
-    tagged = src.select(
-        "doc_id",
-        "name",
-        F.map_filter(
-            F.map_from_arrays(
-                F.array(F.lit(KEY_ZH), F.lit(KEY_HANS), F.lit(KEY_HANT)),
-                F.array("zh_tag", "hans_tag", "hant_tag"),
-            ),
-            lambda k, v: v.isNotNull(),
-        ).alias("tags"),
-    )
-    # tables=CURATED pins the gate to the curated dictionaries even on a
-    # box where a deployment exported SPARK_GRAFT_OPENCC_DIR — the
-    # static DuckDB oracle compiles the curated literals, so the Spark
-    # side must too (review finding: env var would hash-mismatch the
-    # gate for correct code)
-    from openmaptiles_zh_modifier_spark.functions.zh import CURATED
-
-    out = derive_zh_columns(
-        tagged, "doc_id", compat_names_typo=True, tables=CURATED
-    )
-    return (
-        out.where("needs_update")
-        .select("doc_id", "hans", "hant")
-        .orderBy("doc_id")
-    )
+    return updates_frame(
+        _fixture_tags(src), "doc_id", compat_names_typo=True, tables=CURATED
+    ).orderBy("doc_id")
 
 
 # =========================================================================

@@ -381,7 +381,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_zh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's native workload (zh back-fill, SURVEY.md §2.1-§2.10)
     as a Structured Streaming pipeline: the derivation chain is stateless
-    column expressions + two pandas_udfs, so it runs unmodified under
+    column expressions, so it runs unmodified under
     readStream in append mode — the CDC-shaped deployment of the back-fill
     (new rows arrive, derived zh tags stream out). Hash-checked against
     the same DuckDB oracle as the batch `zh_backfill` query.

@@ -85,6 +85,37 @@ def test_cow_backfill_partitioned_table(spark, tmp_path):
     assert cow_read(spark, root, version=1).count() == df.count()
 
 
+def test_cow_backfill_merge_source_has_no_join(spark, tmp_path):
+    """On a partitioned table the merge source carries the partition
+    column projected from the same snapshot row as the derivation — one
+    scan, no join back onto the table."""
+    import unittest.mock as mock
+
+    from pyspark.sql import functions as F
+
+    from openmaptiles_zh_modifier_spark.operators import cow_table
+
+    root = str(tmp_path / "zh_cow_nojoin")
+    df = mk(
+        spark, [Row(id=i, name=n, tags=t) for i, n, t, *_ in LATTICE]
+    ).withColumn("region", (F.col("id") % 3).cast("int"))
+    cow_create(spark, root, df, partition_by="region")
+    real_merge = cow_table.cow_merge
+    plans = []
+
+    def capture(spark_, root_, src_, **kw):
+        plans.append(src_._jdf.queryExecution().analyzed().toString())
+        return real_merge(spark_, root_, src_, **kw)
+
+    with mock.patch(
+        "openmaptiles_zh_modifier_spark.operators.cow_table.cow_merge",
+        side_effect=capture,
+    ):
+        run_backfill_cow(spark, root)
+    assert len(plans) == 1
+    assert "Join" not in plans[0], plans[0]
+
+
 def test_cow_backfill_conflict_on_concurrent_commit(spark, lattice_cow):
     """The base_version pin: a commit that lands between the snapshot
     read and the merge publish must surface as CowConflictError, not a

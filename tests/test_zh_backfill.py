@@ -19,11 +19,13 @@ from openmaptiles_zh_modifier_spark.functions.zh import (
     is_han,
     to_simplified,
     to_traditional,
+    to_traditional_py,
 )
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
     backfill_table,
-    merge_backfill,
+    derive_zh_columns,
     updates_frame,
+    updates_frame_with_tags,
 )
 
 SCHEMA = StructType(
@@ -114,31 +116,8 @@ def test_b1_typo_compat_regenerates_hant(spark):
     # regenerated — the B1 bug being reproduced is that the EXISTING value
     # is clobbered by a regenerated one (here the regeneration happens to
     # produce the same text because 头发 is in the phrase vocabulary)
-    assert faithful["name:zh-Hant"] == to_trad_py("头发")
+    assert faithful["name:zh-Hant"] == to_traditional_py("头发")
     assert faithful["name:zh-Hans"] == "头发"
-
-
-def to_trad_py(s: str) -> str:
-    """Python twin of functions.zh.to_traditional (phrase pass + chars)."""
-    from openmaptiles_zh_modifier_spark.functions.zh import (
-        S2T_FROM,
-        S2T_PHRASES,
-        S2T_TO,
-        _phrase_order,
-    )
-
-    for src, dst in _phrase_order(S2T_PHRASES):
-        s = s.replace(src, dst)
-    return s.translate(str.maketrans(S2T_FROM, S2T_TO))
-
-
-def test_merge_backfill_equals_inline_backfill(spark, lattice_df):
-    upd = updates_frame(lattice_df)
-    via_merge = merge_backfill(lattice_df, upd, broadcast_updates=True)
-    via_inline = backfill_table(lattice_df)
-    a = {r["id"]: r["tags"] for r in via_merge.collect()}
-    b = {r["id"]: r["tags"] for r in via_inline.collect()}
-    assert a == b
 
 
 def test_is_han_non_bmp(spark):
@@ -360,34 +339,45 @@ def test_opencc_divergence_envelope(spark):
     assert diverged == []
 
 
-def test_updates_frame_with_tags_consistent(spark, lattice_df):
+@pytest.mark.parametrize("typo", [False, True])
+def test_updates_frame_with_tags_consistent(spark, lattice_df, typo):
     """The single-scan (id, hans, hant, new_tags_map) frame must select
-    exactly the rows updates_frame selects, with identical hans/hant, and
-    its new_tags_map must equal what backfill_table writes for those rows
-    — the three write-back forms are views of one derivation."""
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
-    )
-
+    exactly the rows updates_frame and derive_zh_columns' needs_update
+    select, with identical hans/hant, and its new_tags_map must equal what
+    backfill_table writes for those rows — in both compat modes, the
+    write-back forms are views of one derivation."""
     upd = {
         r["id"]: (r["hans"], r["hant"])
-        for r in updates_frame(lattice_df).collect()
+        for r in updates_frame(lattice_df, compat_names_typo=typo).collect()
+    }
+    derived = {
+        r["id"]: (r["hans"], r["hant"])
+        for r in derive_zh_columns(lattice_df, compat_names_typo=typo)
+        .where("needs_update")
+        .collect()
     }
     with_tags = {
         r["id"]: (r["hans"], r["hant"], r["new_tags_map"])
-        for r in updates_frame_with_tags(lattice_df).collect()
+        for r in updates_frame_with_tags(
+            lattice_df, compat_names_typo=typo
+        ).collect()
     }
-    assert {i: v[:2] for i, v in with_tags.items()} == upd
+    assert upd
+    assert {i: v[:2] for i, v in with_tags.items()} == upd == derived
     rewritten = {
-        r["id"]: r["tags"] for r in backfill_table(lattice_df).collect()
+        r["id"]: r["tags"]
+        for r in backfill_table(lattice_df, compat_names_typo=typo).collect()
     }
     for i, (_, _, new_tags) in with_tags.items():
         assert new_tags == rewritten[i], i
+    for i, _, tags, *_ in LATTICE:
+        if i not in with_tags:
+            assert rewritten[i] == tags, f"row {i} must be untouched"
 
 
 def test_typo_compat_gate_query_diverges_by_mode(spark):
     """The oracle-gated zh_backfill_typo_compat entry (VERDICT r6 #8)
-    runs derive_zh_columns in typo mode over a fixture whose stored Hant
+    runs the back-fill in typo mode over a fixture whose stored Hant
     (rows doc_id%7 in {2,6}) DIVERGES from regeneration — so a wrong
     implementation that reads the correct key would keep the stored
     value and break the driver hash. Prove the divergence here by
@@ -396,37 +386,19 @@ def test_typo_compat_gate_query_diverges_by_mode(spark):
 
     from pyspark.sql import functions as F
 
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        KEY_HANS,
-        KEY_HANT,
-        KEY_ZH,
-        derive_zh_columns,
-    )
     from openmaptiles_zh_modifier_spark.registry import (
-        _ZH_HANS,
         _ZH_HANT_DIVERGENT,
-        _ZH_NAMES,
-        _ZH_TAGVALS,
+        _fixture_tags,
         _pick_spark,
+        zh_fixture_src,
     )
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    idx = F.col("doc_id")
-    tagged = docs.select(
-        idx,
-        _pick_spark(_ZH_NAMES, idx).alias("name"),
-        F.map_filter(
-            F.map_from_arrays(
-                F.array(F.lit(KEY_ZH), F.lit(KEY_HANS), F.lit(KEY_HANT)),
-                F.array(
-                    _pick_spark(_ZH_TAGVALS, idx),
-                    _pick_spark(_ZH_HANS, idx),
-                    _pick_spark(_ZH_HANT_DIVERGENT, idx),
-                ),
-            ),
-            lambda k, v: v.isNotNull(),
-        ).alias("tags"),
+    tagged = _fixture_tags(
+        zh_fixture_src(docs).withColumn(
+            "hant_tag", _pick_spark(_ZH_HANT_DIVERGENT, F.col("doc_id"))
+        )
     )
     faithful = {
         r["doc_id"]: r["hant"]
@@ -447,3 +419,29 @@ def test_typo_compat_gate_query_diverges_by_mode(spark):
         else:
             assert faithful[doc_id] == hant
     assert saw >= 2
+
+
+@pytest.mark.parametrize(
+    "name", ["zh_backfill", "zh_backfill_typo_compat", "q_stream_zh_backfill"]
+)
+def test_backfill_queries_match_oracle(spark, sf_dir, name):
+    """The registered back-fill queries (batch, typo-compat, streaming)
+    hash-equal their DuckDB oracle SQL, compared the way
+    tools/check_oracle.py does (column-name-sorted, order-insensitive
+    value hash)."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from tools.check_oracle import frame_fingerprint
+
+    sdf = entry.queries()[name](spark, sf_dir)
+    got = frame_fingerprint(sdf.columns, [tuple(r) for r in sdf.collect()])
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
+    res = con.execute(entry.oracle_sql()[name])
+    want = frame_fingerprint([d[0] for d in res.description], res.fetchall())
+    assert got[0] > 0
+    assert got == want
